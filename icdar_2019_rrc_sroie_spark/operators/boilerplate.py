@@ -43,11 +43,6 @@ def to_clean_lines(text: Column) -> Column:
     )
 
 
-def clean_text(text: Column) -> Column:
-    """Fully stripped payload re-joined with newlines (main content)."""
-    return F.array_join(to_clean_lines(text), "\n")
-
-
 #: Main-content container (DOM heuristic): prefer the inner text of the
 #: first ``<div class="content">…</div>`` block when present.
 MAIN_CONTENT_PATTERN = r'(?is)<div class="content">(.*?)</div>'
@@ -59,17 +54,6 @@ def main_content(text: Column) -> Column:
     payload. Pure Catalyst; runs before tag stripping."""
     inner = F.regexp_extract(text, MAIN_CONTENT_PATTERN, 1)
     return F.when(inner != "", inner).otherwise(text)
-
-
-def dehyphenate(text: Column) -> Column:
-    """Rejoin words split by a line-break hyphen (PDF-layout artifact):
-    ``exam-\\nple`` → ``example``."""
-    return F.regexp_replace(text, r"(\w)-\n\s*(\w)", r"$1$2")
-
-
-def collapse_whitespace(text: Column) -> Column:
-    """Collapse runs of spaces/tabs (not newlines) to one space."""
-    return F.regexp_replace(text, r"[ \t]+", " ")
 
 
 # --------------------------------------------------------------------------

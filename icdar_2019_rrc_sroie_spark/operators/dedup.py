@@ -142,20 +142,9 @@ MINHASH_BAND_SEP = "|"
 def minhash_slice_expr(digest: Column, i: int) -> Column:
     """The slice rule of hash ``i``: 8 hex chars at offset 8*(i%4) of
     its source digest (d1 for i < 4, the prefixed d2 for i >= 4) —
-    THE single source of truth shared by the batch aggregate, the
-    per-row stream path and this module's per-call form."""
+    THE single source of truth shared by the batch aggregate and the
+    per-row stream path."""
     return F.substring(digest, (i % 4) * 8 + 1, 8)
-
-
-def minhash_digest_expr(shingle: Column, i: int) -> Column:
-    """Hash ``i`` of one shingle, computed from the raw shingle (digest
-    + slice in one expression). The batch and per-row paths compute the
-    1-2 digests once per shingle and apply :func:`minhash_slice_expr`
-    (cheaper); this form exists for tests/one-off expressions —
-    byte-identical either way (pinned by the row_bands parity test)."""
-    src = F.md5(shingle) if i < 4 else F.md5(
-        F.concat(F.lit(MINHASH_SECOND_DIGEST_PREFIX), shingle))
-    return minhash_slice_expr(src, i)
 
 
 def band_hash_expr(sig_cols: list[Column]) -> Column:

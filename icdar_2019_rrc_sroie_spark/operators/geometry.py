@@ -177,22 +177,3 @@ def iou_expr(a_xmin, a_ymin, a_xmax, a_ymax,
     area_a = (a_xmax - a_xmin + 1.0) * (a_ymax - a_ymin + 1.0)
     area_b = (b_xmax - b_xmin + 1.0) * (b_ymax - b_ymin + 1.0)
     return inter / (area_a + area_b - inter + F.lit(eps))
-
-
-def nms_iou_expr(a_xmin, a_ymin, a_xmax, a_ymax,
-                 b_xmin, b_ymin, b_xmax, b_ymax) -> Column:
-    """IoU with the NMS kernel's conventions (J3): same as J1 but with
-    no eps in the denominator
-    (data/postprocessing/non_max_suppression.py:26-59)."""
-    ix = F.greatest(
-        F.lit(0.0),
-        F.least(a_xmax, b_xmax) - F.greatest(a_xmin, b_xmin),
-    )
-    iy = F.greatest(
-        F.lit(0.0),
-        F.least(a_ymax, b_ymax) - F.greatest(a_ymin, b_ymin),
-    )
-    inter = ix * iy
-    area_a = (a_xmax - a_xmin + 1.0) * (a_ymax - a_ymin + 1.0)
-    area_b = (b_xmax - b_xmin + 1.0) * (b_ymax - b_ymin + 1.0)
-    return inter / (area_a + area_b - inter)

@@ -1,4 +1,4 @@
-"""Sinks (S10/S11): submission-format encoders + partitioned writers.
+"""Sinks (S10/S11): submission-format encoders and the contest zip.
 
 The reference writes per-image ``.txt`` files and zips them
 (text_localization/ctpn/evaluation.py:161-183 detection;
@@ -65,17 +65,6 @@ def entity_submission(spans: DataFrame) -> DataFrame:
         )
     )
     return per_turn.select("conv_id", "turn_idx", payload.alias("submission"))
-
-
-def write_partitioned(df: DataFrame, path: str, *, by=("conv_id",),
-                      mode: str = "overwrite") -> None:
-    """Range-partitioned, sorted, clustered write (W2 stable ordering)."""
-    (
-        df.repartitionByRange(*by)
-        .sortWithinPartitions(*by)
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def package_submission_zip(df: DataFrame, zip_path: str,

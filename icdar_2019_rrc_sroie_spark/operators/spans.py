@@ -129,12 +129,15 @@ def absorb_continuations(classes, texts, dates, totals):
 
 
 def turns_with_lines(classified: DataFrame) -> DataFrame:
-    """One row per turn: sorted arrays of per-line features.
+    """One row per *receipt* turn: sorted arrays of per-line features.
 
-    Every regex-derived feature (date/total extraction, context flag)
-    was computed once on the map side; the reduce side only rearranges
-    arrays — no pattern matching after the shuffle except the per-turn
-    RND note scan and the winner-line cleanups."""
+    Receipt pre-gate: only turns with at least one DATE line AND at
+    least one TOTAL line survive; every other turn is dropped here.
+
+    Date/total extraction runs once per line on the map side. ``ctxs``
+    (the total-context flag) and ``probs`` (a function of the class)
+    are not shipped through the shuffle: both are recomputed after it,
+    for the turns that pass the pre-gate only."""
     from .classify import prob_expr
     from .entities import total_context_expr
 

@@ -54,44 +54,17 @@ if ENGINE_CONFS["spark.local.dir"].startswith("/dev/shm"):
     ENGINE_CONFS["spark.shuffle.spill.compress"] = "false"
 
 
-#: Sessions whose Python worker pool has been pre-forked (by appId).
-_WORKER_POOL_WARMED: set[str] = set()
-
-
-def _prefork_python_workers(spark: SparkSession) -> None:
-    """Fork the Python worker pool (and initialize the Arrow runner
-    path) once at session creation instead of inside the first Arrow
-    kernel's query. ``spark.python.worker.reuse`` (default on) keeps
-    the pool alive, so this is purely WHERE the one-time ~3 s
-    daemon-fork + import cost lands — no data is read and no result
-    is computed or cached. The same pre-fork is standard practice on
-    clusters (a warmup stage after executor acquisition) for exactly
-    this reason: the first user-facing query should not pay worker
-    bring-up. Opt out with SPARK_GRAFT_PREFORK=0."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _WORKER_POOL_WARMED:
-        return
-    _WORKER_POOL_WARMED.add(app_id)
-    if os.environ.get("SPARK_GRAFT_PREFORK", "1") == "0":
-        return
-    try:
-        n = spark.sparkContext.defaultParallelism
-        (spark.range(64 * n).repartition(n)
-         .mapInPandas(lambda it: it, "id long")
-         .write.format("noop").mode("overwrite").save())
-    except Exception:  # noqa: BLE001 — warmup must never break startup
-        pass
-
-
 def get_spark(app_name: str = "sroie-spark", master: str | None = None,
               extra_confs: dict | None = None) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's defaults."""
+    """Build (or fetch) a SparkSession with the engine's defaults.
+
+    Runs no job: a query with an Arrow kernel forks its Python workers
+    on first use, and ``spark.python.worker.reuse`` (default on) keeps
+    them for later queries."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )
     for key, value in {**ENGINE_CONFS, **(extra_confs or {})}.items():
         builder = builder.config(key, value)
-    spark = builder.getOrCreate()
-    _prefork_python_workers(spark)
-    return spark
+    return builder.getOrCreate()

@@ -2,9 +2,11 @@
 band separates this host's turbo/SMT jitter from real contention, and
 the retry picks the attempt with the higher floor."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
 

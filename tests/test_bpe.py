@@ -4,12 +4,14 @@ Arrow seam."""
 
 import hashlib
 import json
+import os
 import re
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from icdar_2019_rrc_sroie_spark.operators.bpe import (  # noqa: E402
     bpe_profile,
@@ -48,7 +50,8 @@ def test_trainer_is_deterministic(tmp_path):
 
     out = tmp_path / "merges.json"
     subprocess.run(
-        [sys.executable, "/root/repo/tools/train_bpe.py", str(out)],
+        [sys.executable, os.path.join(REPO, "tools", "train_bpe.py"),
+         str(out)],
         check=True, capture_output=True)
     with open(default_merges_path()) as f:
         assert json.loads(out.read_text()) == json.load(f)

@@ -34,6 +34,9 @@ from icdar_2019_rrc_sroie_spark.operators.detect_learned import (
 )
 from icdar_2019_rrc_sroie_spark.operators.multimodal import encode_bmp
 
+TOOLS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+
 
 def _iou(a, b):
     ix1, iy1 = max(a[0], b[0]), max(a[1], b[1])
@@ -80,7 +83,8 @@ def test_trainer_reproduces_committed_weights(tmp_path):
 
     out = tmp_path / "w.npz"
     subprocess.run(
-        [sys.executable, "/root/repo/tools/train_ctpn_lite.py", str(out)],
+        [sys.executable, os.path.join(TOOLS, "train_ctpn_lite.py"),
+         str(out)],
         check=True, capture_output=True)
     fresh = np.load(out)
     committed = np.load(default_weights_path())

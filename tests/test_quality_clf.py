@@ -4,11 +4,13 @@ zero-shuffle plan shape."""
 
 import hashlib
 import json
+import os
 import re
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from icdar_2019_rrc_sroie_spark.operators.quality_clf import (  # noqa: E402
     default_weights_path,
@@ -39,7 +41,8 @@ def test_holdout_accuracy_gate():
 def test_trainer_is_deterministic(tmp_path):
     out = tmp_path / "clf.json"
     subprocess.run(
-        [sys.executable, "/root/repo/tools/train_quality.py", str(out)],
+        [sys.executable, os.path.join(REPO, "tools", "train_quality.py"),
+         str(out)],
         check=True, capture_output=True)
     with open(default_weights_path()) as f:
         assert json.loads(out.read_text()) == json.load(f)

@@ -3,13 +3,15 @@ equivalence with the in-memory reference trainer, partitioning
 invariance of the quantized-gradient sums, and Spark-vs-Python
 featurization parity."""
 
+import os
 import sys
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from icdar_2019_rrc_sroie_spark.operators.quality_train import (  # noqa: E402
     densify,

@@ -4,12 +4,13 @@ compares row count, schema-width and order-insensitive values."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from icdar_2019_rrc_sroie_spark.operators.indexes import (  # noqa: E402
     release_indexes,

@@ -18,11 +18,12 @@ Usage: python tools/train_bpe.py [out.json] [n_merges]
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from icdar_2019_rrc_sroie_spark.operators.bpe import (  # noqa: E402
     default_merges_path,

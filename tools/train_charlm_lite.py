@@ -20,12 +20,13 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from icdar_2019_rrc_sroie_spark.constants import LABELS_CLASSES  # noqa: E402
 from icdar_2019_rrc_sroie_spark.operators.model_udf import (  # noqa: E402

@@ -18,11 +18,12 @@ Usage: python tools/train_ctpn_lite.py [out.npz]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from icdar_2019_rrc_sroie_spark.operators.detect_learned import (  # noqa: E402
     DETECT_HEIGHTS,

@@ -31,12 +31,13 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import re
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from icdar_2019_rrc_sroie_spark.operators.quality_clf import (  # noqa: E402
     default_weights_path,
