@@ -11,6 +11,12 @@ space-join (:153-163), cleaning, fallback rules and null drop
 (:165-254) all happen as Catalyst array algebra on that one row per
 turn.
 
+The receipt gate (a DATE line AND a TOTAL line) is applied by the
+producers of those turn rows (``turns_with_lines`` here,
+``turns_with_features`` for the stateless strategy), below the
+address-absorption fold; ``spans_from_turns`` is a pure projection,
+staged so that every interpreted fold appears once in the plan.
+
 Scale rationale: turns are small (10-500 lines) so the collected array
 is bounded; the plan has exactly one exchange — hash(conv_id, turn_idx)
 — and the classifier chain upstream is evaluated exactly once (the
@@ -22,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..constants import LABELS_CLASSES
+from ..constants import ENTITY_LABELS, LABELS_CLASSES
 from .entities import (
     clean_address_expr,
     clean_company_expr,
@@ -35,7 +41,6 @@ _TURN_KEYS = ("conv_id", "turn_idx")
 
 _DATE = LABELS_CLASSES["date"]
 _TOTAL = LABELS_CLASSES["total"]
-_COMPANY = LABELS_CLASSES["company"]
 _ADDRESS = LABELS_CLASSES["address"]
 _NONE = LABELS_CLASSES["none"]
 
@@ -59,12 +64,10 @@ def _best_run(entity_cls: int, runs: Column) -> Column:
     )
 
 
-def _best_run_value(entity_cls: int, runs: Column, values: Column,
-                    probs: Column) -> Column:
+def _best_run_value(best: Column, values: Column, probs: Column) -> Column:
     """date/total winner: the precomputed value of the first line inside
-    the winning run that reaches the run's max probability
+    the winning run ``best`` that reaches the run's max probability
     (probabilities.index(max, start, stop) — earliest wins)."""
-    best = _best_run(entity_cls, runs)
     s, e, run_max = best["s"], best["e"], best["run_max"]
     idx = F.try_element_at(
         F.filter(
@@ -79,15 +82,25 @@ def _best_run_value(entity_cls: int, runs: Column, values: Column,
     )
 
 
-def _best_run_joined(entity_cls: int, runs: Column, texts: Column) -> Column:
-    """company/address winner: run lines joined with spaces
-    (entity_matching.py:161-163)."""
-    best = _best_run(entity_cls, runs)
+def _best_run_joined(best: Column, texts: Column) -> Column:
+    """company/address winner: the lines of the winning run ``best``
+    joined with spaces (entity_matching.py:161-163)."""
     s, e = best["s"], best["e"]
     raw = F.array_join(F.slice(texts, s + 1, e - s + 1), " ")
     return F.when(best.isNull(), F.lit("")).otherwise(
         F.coalesce(raw, F.lit(""))
     )
+
+
+def receipt_gate(classes: Column) -> Column:
+    """Receipt precondition: at least one DATE line AND one TOTAL line.
+
+    ``classes`` is referenced once, so a filter pushed below the
+    projection that computes it inlines that expression once, not
+    twice. Invariant under ``absorb_continuations`` (it only rewrites
+    none→address), so it may run on the classes before absorption."""
+    return F.size(F.array_intersect(
+        classes, F.array(F.lit(_DATE), F.lit(_TOTAL)))) == 2
 
 
 def absorb_continuations(classes, texts, dates, totals):
@@ -161,16 +174,10 @@ def turns_with_lines(classified: DataFrame) -> DataFrame:
         F.transform("L", lambda x: x["date_ex"]).alias("dates"),
         F.transform("L", lambda x: x["total_ex"]).alias("totals"),
     )
-    # Receipt pre-gate BEFORE the absorption fold (r7): absorption only
-    # ever rewrites none→address, never creates or destroys a DATE or
-    # TOTAL class, so array_contains(classes, DATE/TOTAL) is invariant
-    # under it — gating on classes0 here is exactly the gate
-    # spans_from_turns applies on the absorbed classes, moved below the
-    # expensive interpreted fold so only receipt turns (~1%) pay for
-    # absorption, probs and the ctx recompute.
-    base = base.filter(
-        F.array_contains(F.col("classes0"), _DATE)
-        & F.array_contains(F.col("classes0"), _TOTAL))
+    # Receipt pre-gate BEFORE the absorption fold: the gate is
+    # invariant under absorption (see ``receipt_gate``), so only receipt
+    # turns (~1%) pay for absorption, probs and the ctx recompute.
+    base = base.filter(receipt_gate(F.col("classes0")))
     classes = absorb_continuations(
         F.col("classes0"), F.col("texts"), F.col("dates"), F.col("totals"))
     return base.withColumn(
@@ -192,27 +199,35 @@ def assemble_spans(classified: DataFrame) -> DataFrame:
 
 def spans_from_turns(turns: DataFrame,
                      passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """Turn-array rows → spans (conv_id, turn_idx, label, text).
+    """Receipt-turn rows → spans (conv_id, turn_idx, label, text).
 
     ``turns`` carries per-turn arrays (texts, classes, probs, dates,
-    totals, ctxs) in line order. Pure projection — callers that already
-    have one row per turn (the transcripts flagship) get a
-    shuffle-free plan. Only *receipt turns* (a date line AND a
-    contextual total line present — the reference precondition) emit
-    spans.
+    totals, ctxs) in line order, one row per *receipt turn*: the
+    producers (``turns_with_lines``, ``turns_with_features``) apply
+    ``receipt_gate``. Pure projection — callers that already have one
+    row per turn (the transcripts flagship) get a shuffle-free plan.
+
+    Staged as a chain of projections, each reading the previous stage's
+    values by column name: run starts → runs → the four winning runs →
+    raw strings → cleaned company/address → fallbacks → ``stack``. A
+    ``Column`` is an expression tree, not a value: built as one
+    projection, each winning-run fold would be pasted into every use of
+    it. CollapseProject never inlines a non-cheap value used more than
+    once, so each fold is planned and evaluated once
+    (``tests/test_plan_hygiene.py``).
     """
+    keep = (*_TURN_KEYS, *passthrough)
     C, P, texts = F.col("classes"), F.col("probs"), F.col("texts")
+    dates, totals = F.col("dates"), F.col("totals")
     n = F.size(C)
 
-    receipt = F.array_contains(C, _DATE) & F.array_contains(C, _TOTAL)
-    turns = turns.filter(receipt)
-
     # run starts: i == 0 or class change (W3 gaps-and-islands, in-array)
-    starts = F.filter(
+    turns = turns.withColumn("starts", F.filter(
         F.sequence(F.lit(0), n - 1),
         lambda i: (i == 0)
         | (F.element_at(C, i + 1) != F.element_at(C, i)),
-    )
+    ))
+    starts = F.col("starts")
     m = F.size(starts)
     runs = F.transform(
         F.sequence(F.lit(0), m - 1),
@@ -235,34 +250,40 @@ def spans_from_turns(turns: DataFrame,
             ).alias("run_max"),
         ),
     )
+    turns = turns.withColumn("runs", runs)
 
-    with_runs = turns.withColumn("runs", runs)
-    R = F.col("runs")
+    best = {name: F.col(f"best_{name}") for name in ENTITY_LABELS}
+    turns = turns.withColumns({
+        f"best_{name}": _best_run(LABELS_CLASSES[name], F.col("runs"))
+        for name in best
+    })
+    turns = turns.withColumns({
+        "company_raw": _best_run_joined(best["company"], texts),
+        "address_raw": _best_run_joined(best["address"], texts),
+        "date_p": _best_run_value(best["date"], dates, P),
+        "total_p": _best_run_value(best["total"], totals, P),
+    })
+    turns = turns.withColumns({
+        "company_p": clean_company_expr(F.col("company_raw")),
+        "address": clean_address_expr(F.col("address_raw")),
+    })
 
-    company_p = clean_company_expr(_best_run_joined(_COMPANY, R, texts))
-    address_p = clean_address_expr(_best_run_joined(_ADDRESS, R, texts))
-    date_p = _best_run_value(_DATE, R, F.col("dates"), F.col("probs"))
-    total_p = _best_run_value(_TOTAL, R, F.col("totals"), F.col("probs"))
-
-    company = F.when(company_p == "", company_fallback_expr(texts)).otherwise(company_p)
-    date = F.when(date_p == "", date_fallback_from(F.col("dates"))).otherwise(date_p)
-    total = F.when(
-        total_p == "",
-        total_fallback_from(F.col("totals"), F.col("ctxs"), texts),
-    ).otherwise(total_p)
-
-    resolved = with_runs.select(
-        *_TURN_KEYS,
-        *passthrough,
-        company.alias("company"),
-        date.alias("date"),
-        address_p.alias("address"),
-        total.alias("total"),
+    company_p, date_p, total_p = (
+        F.col("company_p"), F.col("date_p"), F.col("total_p"))
+    resolved = turns.select(
+        *keep,
+        F.when(company_p == "", company_fallback_expr(texts))
+        .otherwise(company_p).alias("company"),
+        F.when(date_p == "", date_fallback_from(dates))
+        .otherwise(date_p).alias("date"),
+        "address",
+        F.when(
+            total_p == "", total_fallback_from(totals, F.col("ctxs"), texts),
+        ).otherwise(total_p).alias("total"),
     )
 
     return resolved.select(
-        *_TURN_KEYS,
-        *passthrough,
+        *keep,
         F.expr(
             "stack(4, 'company', company, 'date', date, "
             "'address', address, 'total', total) as (label, text)"

@@ -34,7 +34,11 @@ from ..operators.entities import (
     extract_total_expr,
     total_context_expr,
 )
-from ..operators.spans import spans_from_turns
+from ..operators.spans import (
+    absorb_continuations,
+    receipt_gate,
+    spans_from_turns,
+)
 
 SPAN_COLUMNS = ("conv_id", "turn_idx", "label", "text")
 
@@ -50,7 +54,12 @@ def turn_lines(transcripts: DataFrame) -> DataFrame:
 
 def turns_with_features(transcripts: DataFrame,
                         passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """One row per turn with per-line feature arrays — no shuffle.
+    """One row per *receipt* turn with per-line feature arrays — no
+    shuffle.
+
+    Applies ``receipt_gate`` (a DATE line AND a TOTAL line) on the
+    classes before the absorption fold, as ``turns_with_lines`` does,
+    so only receipt turns pay for absorption and probs.
 
     ``passthrough`` columns (e.g. ``ts`` for streaming windows) survive
     onto the span rows."""
@@ -73,9 +82,8 @@ def turns_with_features(transcripts: DataFrame,
             F.element_at(F.col("totals"), i + 1),
         ),
     )
-    from ..operators.spans import absorb_continuations
-
-    with_cls = with_feat.withColumn("classes0", classes)
+    with_cls = with_feat.withColumn("classes0", classes) \
+        .filter(receipt_gate(F.col("classes0")))
     absorbed = absorb_continuations(
         F.col("classes0"), F.col("texts"), F.col("dates"), F.col("totals"))
     with_cls = with_cls.withColumn("classes", absorbed).drop("classes0")

@@ -44,6 +44,13 @@ ENGINE_CONFS = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     "spark.local.dir": _local_dirs(),
     "spark.ui.enabled": "false",
+    # PySpark's DataFrame call-site capture: with it on, every Column
+    # operator walks the Python stack and makes extra py4j round trips,
+    # about 2-3x the py4j calls and Python CPU of building the flagship
+    # plan. Static, so it is set here. With it off an error still names
+    # the failing expression; its query context just no longer carries
+    # the Python file and line that built it.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 # Shuffle blocks living in RAM (tmpfs) gain nothing from lz4 — profiled

@@ -75,9 +75,13 @@ def test_weights_file_committed_and_loadable():
     assert (p["w"] > 0).any() and (p["w"] < 0).any()
 
 
-def test_trainer_reproduces_committed_weights(tmp_path):
-    """Determinism: rerunning the offline trainer writes bit-identical
-    parameters (the checkpoint is auditable, not a one-off artifact)."""
+def test_trainer_reproduces_committed_weights(spark, tmp_path):
+    """Determinism: rerunning the offline trainer reproduces the
+    committed parameters to within float rounding, and the detector
+    serves exactly the same lines from either set on held-out pages.
+    Bit-identity is not portable: OpenBLAS picks its matrix-vector
+    kernel per CPU (DYNAMIC_ARCH), which moves w/b by ~1e-15 over the
+    500 epochs."""
     import subprocess
     import sys
 
@@ -86,10 +90,23 @@ def test_trainer_reproduces_committed_weights(tmp_path):
         [sys.executable, os.path.join(TOOLS, "train_ctpn_lite.py"),
          str(out)],
         check=True, capture_output=True)
-    fresh = np.load(out)
-    committed = np.load(default_weights_path())
-    assert np.array_equal(fresh["w"], committed["w"])
-    assert np.array_equal(fresh["b"], committed["b"])
+    fresh = load_detector_params(str(out))
+    committed = load_detector_params()
+    np.testing.assert_allclose(fresh["w"], committed["w"],
+                               rtol=1e-12, atol=0)
+    np.testing.assert_allclose(fresh["b"], committed["b"],
+                               rtol=1e-12, atol=0)
+
+    media, _ = _media_df(spark, range(1, 41, 2))
+    cols = ["doc_id", "xmin", "ymin", "xmax", "ymax"]
+
+    def served(params):
+        return (detect_lines_learned(media, params=params).toPandas()[cols]
+                .sort_values(cols).reset_index(drop=True))
+
+    want = served(committed)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(served(fresh), want)
 
 
 def test_anchor_boxes_np_matches_anchor_grid(spark):

@@ -47,6 +47,30 @@ def test_flagship_no_python_after_generation(spark):
     assert "ArrowEvalPython" not in plan
 
 
+def _fold_counts(df) -> tuple[int, int]:
+    """(winning-run folds, address-absorption folds) in the optimized
+    plan of a spans query."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return (plan.count("aggregate(filter(runs"),
+            plan.count("aggregate(arrays_zip"))
+
+
+def test_span_assembly_folds_planned_once(spark):
+    """Span assembly plans each interpreted fold once: one winning-run
+    fold per entity class and one address-absorption fold. A Column is
+    an expression tree, so a fold reused by value would be pasted into
+    every use (144 and 3 copies when built in one projection) and
+    analyzed, optimized and evaluated that many times."""
+    from icdar_2019_rrc_sroie_spark.plans.extraction import (
+        extract_spans_stateless,
+    )
+
+    t = transcripts_df(spark, n_convs=64)
+    assert _fold_counts(extract_spans(t)) == (4, 1)
+    runs, absorb = _fold_counts(extract_spans_stateless(t))
+    assert runs <= 4 and absorb <= 1, (runs, absorb)
+
+
 def test_parquet_filter_pushdown(spark):
     df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     q = df.filter(F.col("l_orderkey") == 42).select("l_orderkey", "l_quantity")
